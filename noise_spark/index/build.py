@@ -643,6 +643,10 @@ def build_index(
         term_stats = segs.groupBy("term").agg(
             F.sum("n_docs").alias("df"), F.sum("tf_sum").alias("cf")
         )
+        # Single-consumption invariant: the observed sums are exact only
+        # because the write below is the ONLY action over the observed
+        # DataFrame. Add no cache and no second action on it before
+        # `obs.get`, or the sums may no longer describe the written table.
         obs = Observation()
         term_stats = term_stats.observe(
             obs,

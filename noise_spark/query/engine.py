@@ -24,6 +24,8 @@ operations —
 
 from __future__ import annotations
 
+from functools import cached_property
+
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -512,13 +514,33 @@ class IndexReader:
         (bucket partition pruning)."""
         return self._decode_segments(None)
 
-    @property
-    def docs(self) -> DataFrame:
-        return self._minus_tombstones(self._union(self._docs_paths))
-
-    @property
+    # Each committed stage's relation is resolved once per reader, on
+    # first use (not in __init__, so opening a reader stays cheap):
+    # spark.read.parquet lists the stage's files and infers its schema,
+    # a job each, plus a listing job over the segments' 64 bucket dirs.
+    # Reusing the resolved DataFrame is exact only because the files
+    # under a committed stage path never change — base stages are
+    # written once, and mutable stages go to fresh versioned
+    # `<stage>__<snap>` dirs (catalog.commit_stages) — so the pinned
+    # listing is the snapshot this reader's manifest already pins.
+    @cached_property
     def segments(self) -> DataFrame:
         return self._union(self._segments_paths)
+
+    @cached_property
+    def _docs_rel(self) -> DataFrame:
+        return self._union(self._docs_paths)
+
+    @cached_property
+    def _term_stats_rel(self) -> DataFrame:
+        stats = self._union(self._term_stats_paths)
+        if self._term_stats_delta:
+            stats = stats.unionByName(self.spark.read.parquet(self._term_stats_delta))
+        return stats
+
+    @property
+    def docs(self) -> DataFrame:
+        return self._minus_tombstones(self._docs_rel)
 
     def term_dfs(self, terms: list[str]) -> dict[str, int]:
         """Doc frequencies, cached per reader: a reader pins one snapshot,
@@ -528,15 +550,12 @@ class IndexReader:
             return {}
         missing = [t for t in terms if t not in self._df_cache]
         if missing:
-            stats = self._union(self._term_stats_paths)
-            if self._term_stats_delta:
-                stats = stats.unionByName(self.spark.read.parquet(self._term_stats_delta))
             # no groupBy exchange: each term has at most one stats row
             # per generation (+ one delta row), so the filtered scan
             # collects ≤ terms × generations rows and the integer sum
             # happens driver-side — one stage instead of two
             rows = (
-                stats.filter(F.col("term").isin(missing))
+                self._term_stats_rel.filter(F.col("term").isin(missing))
                 .select("term", "df")
                 .collect()
             )

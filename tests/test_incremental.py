@@ -100,6 +100,48 @@ def test_upsert_replaces(spark, inc_index):
     _assert_identical(reader, _oracle_for(spark, reader))
 
 
+def _topk(reader) -> dict:
+    out = {}
+    for node in QUERIES:
+        out[node] = [(r["doc_id"], r["score"]) for r in reader.search(node, k=10).collect()]
+        if isinstance(node, (P.Or, P.And)):
+            out[(node, "wand")] = [
+                (r["doc_id"], r["score"]) for r in reader.search_wand(node, k=10).collect()
+            ]
+    return out
+
+
+def test_reader_stays_pinned_across_commits(spark, tmp_path):
+    """A reader that has answered queries (and so holds its resolved
+    stage relations and term-stats cache) keeps answering from ITS
+    snapshot after an append and a delete commit; a reader opened after
+    the commits matches an oracle over the updated corpus."""
+    from pyspark.sql import functions as F
+
+    idx = str(tmp_path / "idx")
+    build_index(spark, generate_pages(spark, 200, seed=42, partitions=2), idx, BuildConfig(block_size=64))
+    old = IndexReader(spark, idx)
+    before = _topk(old)
+    base_docs = old.docs.select("doc_id", "url", "text").collect()
+
+    new_pages = generate_pages(spark, 40, seed=9, partitions=2).withColumn(
+        "url", F.concat(F.lit("https://delta."), F.col("url"))
+    )
+    append_docs(spark, idx, new_pages, BuildConfig(block_size=64))
+    victims = sorted(r["url"] for r in base_docs)[:15]
+    delete_docs(spark, idx, victims)
+
+    assert _topk(old) == before
+    assert old.n_docs == 200
+
+    new = IndexReader(spark, idx)
+    assert new.n_docs == 200 + 40 - 15
+    gen1 = spark.read.parquet(new.cat.stage_info("gen1/docs")["path"])
+    corpus = [(r["doc_id"], r["text"]) for r in base_docs if r["url"] not in victims]
+    corpus += [(r["doc_id"], r["text"]) for r in gen1.select("doc_id", "text").collect()]
+    _assert_identical(new, OracleIndex(corpus))
+
+
 def test_torn_append_invisible_then_resumed(spark, tmp_path):
     """A crash mid-append leaves a torn generation: readers must NOT see
     its docs (no phantoms with missing stats/segments), and a retried

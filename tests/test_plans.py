@@ -243,3 +243,37 @@ def test_return_payload_joins_after_limit(plan_reader):
     )
     p2 = df2._jdf.queryExecution().optimizedPlan().toString()
     assert "GlobalLimit" not in p2
+
+
+def test_warm_reader_plans_without_spark_jobs(spark, small_index):
+    """A reader resolves each stage's parquet relation once: after one
+    query, planning it again launches no Spark job (no file listing, no
+    schema inference, and the term-stats cache hits), and the collect
+    runs no stage as wide as a listing of the segments' bucket dirs."""
+    from noise_spark.index.build import N_BUCKETS
+    from noise_spark.query.parser import run_query
+
+    idx_dir, _ = small_index
+    reader = IndexReader(spark, idx_dir)
+    q = 'find {text: ~= "w00001"} order score() desc return {id: ._id, score: score()} limit 10'
+    first = [(r["id"], r["score"]) for r in run_query(reader, q).collect()]
+    assert first
+
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    try:
+        sc.setJobGroup("warm-plan", "plan a repeat query")
+        df = run_query(reader, q)
+        sc.setJobGroup("warm-collect", "collect a repeat query")
+        again = [(r["id"], r["score"]) for r in df.collect()]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert again == first
+    assert list(st.getJobIdsForGroup("warm-plan")) == []
+    widths = [
+        st.getStageInfo(s).numTasks
+        for j in st.getJobIdsForGroup("warm-collect")
+        for s in st.getJobInfo(j).stageIds
+        if st.getStageInfo(s) is not None
+    ]
+    assert widths and max(widths) < N_BUCKETS, widths
